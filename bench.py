@@ -23,6 +23,7 @@ import time
 
 from pipelines_spark.functions.datetime_ops import derive_partition_columns
 from pipelines_spark.naming import normalize_columns
+from pipelines_spark.plans.staging import staging_scope
 from pipelines_spark.queries import QUERIES
 from pipelines_spark.session import get_spark
 from pipelines_spark.sinks.partitioned import write_partitioned
@@ -75,31 +76,6 @@ HEADLINE = [
 
 def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
-
-
-def _release_all_cached(spark) -> None:
-    """Free CacheManager entries and persisted / localCheckpointed RDD
-    blocks BETWEEN queries. A ~100-query bench session otherwise
-    accumulates every operator's staging blocks (released only on
-    driver GC of the proxy objects), and the resulting executor memory
-    pressure inflates late-suite timings by 2-5x — a long-lived batch
-    session would call release_staging per operator; the bench replays
-    that hygiene wholesale. Called after each query's timing loop, so
-    within-query reuse (best-of-2) is untouched."""
-    spark.catalog.clearCache()
-    # py4j exposes the java.util.Map dict-like
-    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        jrdd.unpersist(False)
-    # localCheckpoint blocks whose frames already went out of scope
-    # are freed by the ContextCleaner only after BOTH sides GC (the
-    # py4j proxy must drop the JVM ref, then the weak-ref queue must
-    # drain). Without the nudge, ~85 staged queries of blocks pile up
-    # in executor storage and the late-suite 10x graph probes read
-    # 3-4x slow (r7: pagerank 57s polluted vs 14s isolated).
-    import gc
-
-    gc.collect()
-    spark.sparkContext._jvm.System.gc()
 
 
 def bench_dump_pipeline(spark, sf_dir: str, out_dir: str) -> None:
@@ -459,12 +435,12 @@ def bench_scale_probe(
         ratios: dict[str, float] = {}
         for name in query_names or SCALE_PROBE_QUERIES:
             best = float("inf")
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                _materialize(QUERIES[name](spark, str(out_dir)))
-                best = min(best, time.perf_counter() - t0)
+            with staging_scope():
+                for _ in range(runs):
+                    t0 = time.perf_counter()
+                    _materialize(QUERIES[name](spark, str(out_dir)))
+                    best = min(best, time.perf_counter() - t0)
             probe[name] = round(best, 3)
-            _release_all_cached(spark)
             if timings.get(name):
                 ratios[name] = round(best / timings[name], 2)
         return {"n_copies": n, "queries": probe, "ratio_vs_base": ratios}
@@ -528,12 +504,12 @@ def control_main() -> None:
     control: dict[str, float] = {}
     for name in CONTROL_SENTINELS:
         best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            _materialize(QUERIES[name](spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
+        with staging_scope():
+            for _ in range(3):
+                t0 = time.perf_counter()
+                _materialize(QUERIES[name](spark, sf_dir))
+                best = min(best, time.perf_counter() - t0)
         control[name] = round(best, 3)
-        _release_all_cached(spark)
     best = float("inf")
     for _ in range(3):
         out_dir = tempfile.mkdtemp(prefix="bench_dump_ctl_")
@@ -616,17 +592,17 @@ def main() -> None:
     # against cache-warm cost; the cold number is the production one.
     for i, name in enumerate(HEADLINE):
         runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            _materialize(QUERIES[name](spark, sf_dir))
-            runs.append(round(time.perf_counter() - t0, 3))
-        if min(runs) < 2.0:
-            t0 = time.perf_counter()
-            _materialize(QUERIES[name](spark, sf_dir))
-            runs.append(round(time.perf_counter() - t0, 3))
+        with staging_scope():
+            for _ in range(2):
+                t0 = time.perf_counter()
+                _materialize(QUERIES[name](spark, sf_dir))
+                runs.append(round(time.perf_counter() - t0, 3))
+            if min(runs) < 2.0:
+                t0 = time.perf_counter()
+                _materialize(QUERIES[name](spark, sf_dir))
+                runs.append(round(time.perf_counter() - t0, 3))
         timings[name] = min(runs)
         spreads[name] = runs
-        _release_all_cached(spark)
         if (i + 1) % 12 == 0:
             loadavg_groups[f"headline_{i + 1}"] = _loadavg()
     loadavg_groups["after_headline"] = _loadavg()
@@ -647,13 +623,13 @@ def main() -> None:
     extended: dict[str, float] = {}
     for i, name in enumerate(EXTENDED):
         runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            _materialize(QUERIES[name](spark, sf_dir))
-            runs.append(round(time.perf_counter() - t0, 3))
+        with staging_scope():
+            for _ in range(2):
+                t0 = time.perf_counter()
+                _materialize(QUERIES[name](spark, sf_dir))
+                runs.append(round(time.perf_counter() - t0, 3))
         extended[name] = min(runs)
         spreads[name] = runs
-        _release_all_cached(spark)
         if (i + 1) % 25 == 0:
             loadavg_groups[f"extended_{i + 1}"] = _loadavg()
     loadavg_groups["after_extended"] = _loadavg()
@@ -714,9 +690,8 @@ def main() -> None:
         # SPARK_GRAFT_SCALE30=0
         if os.environ.get("SPARK_GRAFT_SCALE30", "1") != "0":
             # runs=2 like every other timing: best-of-N measures the
-            # steady-state plan cost (operators that persist staging
-            # frames legitimately reuse them across actions via the
-            # CacheManager's plan matching). A runs=1 entry here would
+            # steady-state plan cost (codegen and file listings warm
+            # up on run 1). A runs=1 entry here would
             # compare this probe's COLD build against the WARM base /
             # x10 numbers and report a phantom super-linear ratio —
             # exactly what the r03 draft artifact showed for minhash

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pipelines_spark.plans.staging import stage
+
 
 def tfidf_cosine_pairs(
     docs: DataFrame,
@@ -99,9 +101,9 @@ def tfidf_cosine_pairs(
     feats = feats.withColumn("suffix_bound", F.sum(F.col("nw") * F.col("mw")).over(w_suffix))
     # three consumers below (prefix postings, probe postings, doc
     # maps): without a lineage cut the 4-window feature pipeline runs
-    # once per branch; the lazy localCheckpoint materializes it once
-    # at the first action and is released with the session
-    feats = feats.localCheckpoint(eager=False)
+    # once per branch; the lazy stage materializes it once at the
+    # first action
+    feats = stage(feats, eager=False)
 
     prefix = feats.filter(F.col("suffix_bound") >= F.lit(threshold - 1e-6)).select(
         F.col("doc_id").alias("_pa"), "term"

@@ -123,19 +123,18 @@ def curate_corpus(
     cluster), plus ``split`` / ``bucket`` / ``shard_no`` assignment.
     ``stats``: (stage, n_docs) counts after each stage; the input
     count is an extra scan of the raw corpus and the per-stage counts
-    are actions over persisted frames — pass ``collect_stats=False``
-    for a zero-extra-job plan — no counts, no eager actions; stage
-    boundaries use LAZY localCheckpoints (GC-freed, nothing for the
-    caller to release) so multi-consumer stages materialize once
-    (stats comes back ``None``).
+    are actions over staged frames — pass ``collect_stats=False``
+    for a zero-extra-job plan — no counts, no eager actions (stats
+    comes back ``None``).
 
-    Cache lifecycle: intermediate persists are released before
-    return; the final canonical frame stays cached (the returned
-    DataFrame is a projection over it, so follow-up actions — the
-    normal case: write-to-lake next — reuse stages 1-3). Long-lived
-    applications curating many corpora should
-    ``spark.catalog.clearCache()`` between corpora, or pass
-    ``collect_stats=False`` (which skips persisting entirely).
+    Cache lifecycle: every stage boundary (and the LSH staging tables
+    inside ``minhash_near_dup_pairs``) is a lazy ``stage()``
+    (plans/staging.py) that materializes once on first use and
+    belongs to the caller's ``staging_scope``. Follow-up actions on
+    ``curated`` inside that scope — the normal case: write-to-lake
+    next — reuse stages 1-3; the scope releases every block on exit,
+    so a long-lived application curating many corpora opens one
+    scope per corpus.
     """
     cfg = config or CurationConfig()
     id_c, text_c = cfg.id_col, cfg.text_col
@@ -147,24 +146,16 @@ def curate_corpus(
     # input once when — and only when — the scan is under-parallel
     # (no-op on any real multi-split table), and every downstream
     # stage boundary inherits the parallel layout.
-    from pipelines_spark.plans.staging import widen_scan
+    #
+    # Stage boundaries are lazy stage() calls: no extra job, but each
+    # boundary materializes ONCE on first use instead of re-deriving
+    # the whole upstream chain per consumer (the full-gate config has
+    # ~6 consumers of the gated chain: measured 28.7 s → 8.1 s warm at
+    # sf0.1). The lineage cut also hands connected_components a
+    # shallow input, so its per-iteration re-analysis stays cheap.
+    from pipelines_spark.plans.staging import stage, widen_scan
 
     docs = widen_scan(docs)
-
-    def persist(df: DataFrame) -> DataFrame:
-        # stats path: explicit persist + unpersist (we control when
-        # everything materializes). Lazy path: LAZY localCheckpoint —
-        # no extra job, but each stage boundary still materializes
-        # ONCE on first use instead of re-deriving the whole upstream
-        # chain per consumer (the full-gate config has ~6 consumers of
-        # the gated chain: measured 28.7 s → 8.1 s warm at sf0.1).
-        # Blocks are executor-local and freed when the frames are
-        # GC'd — no unpersist obligation on the caller.
-        if collect_stats:
-            return df.persist()
-        from pipelines_spark.plans.staging import stage
-
-        return stage(df, eager=False)
 
     counts: list[tuple[str, int]] = (
         [("input", docs.count())] if collect_stats else []
@@ -182,7 +173,7 @@ def curate_corpus(
     )
     if cfg.allowed_langs is not None:
         gated = gated.filter(F.col("detected_lang").isin(*cfg.allowed_langs))
-    gated = persist(gated)
+    gated = stage(gated, eager=False)
     if collect_stats:
         counts.append(("quality_lang_gate", gated.count()))
 
@@ -231,7 +222,7 @@ def curate_corpus(
         keep = scores.filter(
             F.col("_score") >= cfg.min_classifier_score
         ).select(id_c)
-        gated = persist(gated.join(keep, id_c, "semi"))
+        gated = stage(gated.join(keep, id_c, "semi"), eager=False)
         if collect_stats:
             counts.append(("classifier_gate", gated.count()))
 
@@ -239,14 +230,15 @@ def curate_corpus(
     # key, WindowGroupLimit-bounded) — before the dedup stages so
     # their shuffles see the already-shrunk, head-domain-free corpus
     if cfg.max_per_source is not None:
-        gated = persist(
+        gated = stage(
             cap_per_source(
                 gated,
                 source_col=cfg.source_col,
                 id_col=id_c,
                 order_col="quality",
                 n_max=cfg.max_per_source,
-            )
+            ),
+            eager=False,
         )
         if collect_stats:
             counts.append(("source_cap", gated.count()))
@@ -255,7 +247,7 @@ def curate_corpus(
     canon = exact_dedup(gated, [text_c], id_c).select(
         F.col("canonical_id").alias(id_c)
     )
-    exact_kept = persist(gated.join(canon, id_c, "semi"))
+    exact_kept = stage(gated.join(canon, id_c, "semi"), eager=False)
     if collect_stats:
         counts.append(("exact_dedup", exact_kept.count()))
 
@@ -263,7 +255,6 @@ def curate_corpus(
     # post-exact-dedup corpus (CCNet order: dedup before the LM so
     # duplicated boilerplate can't dominate the model it is judged
     # by). Both are linear aggregate+join passes.
-    released: list[DataFrame] = []
     if cfg.max_entropy_bits is not None:
         from pipelines_spark.llm.text import ngram_cross_entropy
 
@@ -273,14 +264,14 @@ def curate_corpus(
         scores = ngram_cross_entropy(
             exact_kept, id_col=id_c, text_col=text_c
         ).select(id_c, "h_bits")
-        released.append(exact_kept)
-        exact_kept = persist(
+        exact_kept = stage(
             exact_kept.join(scores, id_c, "left")
             .filter(
                 F.col("h_bits").isNull()
                 | (F.col("h_bits") <= cfg.max_entropy_bits)
             )
-            .drop("h_bits")
+            .drop("h_bits"),
+            eager=False,
         )
         if collect_stats:
             counts.append(("lm_entropy_gate", exact_kept.count()))
@@ -290,36 +281,15 @@ def curate_corpus(
         keep_ids = duplicate_spans(
             exact_kept, id_col=id_c, text_col=text_c
         ).filter(F.col("dup_frac") <= cfg.max_dup_frac).select(id_c)
-        released.append(exact_kept)
-        exact_kept = persist(exact_kept.join(keep_ids, id_c, "semi"))
+        exact_kept = stage(exact_kept.join(keep_ids, id_c, "semi"), eager=False)
         if collect_stats:
             counts.append(("dup_span_gate", exact_kept.count()))
 
     # 3. near-dup clustering + best-quality canonical per component
-    # staging caches are only attached (and later released) on the
-    # stats path, where we control when everything materializes; with
-    # collect_stats=False the stage boundaries are lazy localCheckpoints
-    # (GC-freed), so nothing needs explicit release for the session.
-    if collect_stats:
-        # the stats path's persist() keeps stage RE-READS cheap but
-        # does NOT truncate the LOGICAL plan; by stage 3 the tree is
-        # deep enough that connected_components' per-iteration
-        # re-analysis dominates the driver (measured: the canonical
-        # stage took 16 s at sf0.1 with the full-gate tree and 45 s
-        # with one more gate stage, on 361 cached docs). A lazy
-        # localCheckpoint boundary hands CC a shallow LogicalRDD
-        # input — blocks free on GC like the lazy path's.
-        from pipelines_spark.plans.staging import stage as _cut
-
-        # keep the cached frame on the release list — the checkpoint
-        # wrapper would otherwise shadow it and leak its cache entry
-        released.append(exact_kept)
-        exact_kept = _cut(exact_kept, eager=False)
     pairs = minhash_near_dup_pairs(
         exact_kept, id_col=id_c, text_col=text_c,
         threshold=cfg.near_dup_threshold,
         log_hot_buckets=collect_stats,
-        persist_staging=collect_stats,
     )
     labels = connected_components(pairs).select(
         F.col("node").alias(id_c), "component_id"
@@ -330,10 +300,11 @@ def curate_corpus(
     w = Window.partitionBy("component_id").orderBy(
         F.col("quality").desc(), F.col(id_c).asc()
     )
-    curated = persist(
+    curated = stage(
         labeled.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        .drop("_rn"),
+        eager=False,
     )
     if collect_stats:
         counts.append(("near_dup_canonical", curated.count()))
@@ -346,18 +317,9 @@ def curate_corpus(
         shard_tokens=cfg.shard_tokens, n_buckets=cfg.shard_buckets,
     )
 
-    if collect_stats:
-        gated.unpersist()
-        exact_kept.unpersist()
-        for frame in released:
-            frame.unpersist()
-        # the LSH staging tables (shingles, banded keys) are persisted
-        # inside minhash_near_dup_pairs; the canonical count above has
-        # materialized everything that needs them
-        from pipelines_spark.llm.dedup import release_staging
-
-        release_staging(pairs)
-        stats = spark.createDataFrame(counts, "stage string, n_docs long")
-    else:
-        stats = None
+    stats = (
+        spark.createDataFrame(counts, "stage string, n_docs long")
+        if collect_stats
+        else None
+    )
     return curated, stats

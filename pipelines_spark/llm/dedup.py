@@ -169,30 +169,6 @@ def band_key_cols(num_hashes: int, bands: int) -> list[Column]:
     ]
 
 
-def _attach_staging(out: DataFrame, frames) -> DataFrame:
-    """Record the persisted staging frames that back ``out`` so the
-    caller can release them with :func:`release_staging` once the
-    output is materialized."""
-    out._staged_frames = tuple(frames)
-    return out
-
-
-def release_staging(df: DataFrame) -> int:
-    """Unpersist the staging frames an operator cached while building
-    ``df`` (call AFTER materializing the output — an action before
-    release reuses the cache, one after recomputes). Mirrors
-    ``curate_corpus``'s explicit cache lifecycle for the standalone
-    operators; a long-lived multi-corpus session must not rely on LRU
-    eviction or session teardown. Returns the number of frames
-    released. No-op on frames without staging."""
-    frames = getattr(df, "_staged_frames", ())
-    for f in frames:
-        f.unpersist()
-    if frames:
-        del df._staged_frames
-    return len(frames)
-
-
 def minhash_near_dup_pairs(
     df: DataFrame,
     *,
@@ -204,16 +180,9 @@ def minhash_near_dup_pairs(
     threshold: float = 0.5,
     max_bucket_size: int | None = 1000,
     log_hot_buckets: bool = True,
-    persist_staging: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs (Jaccard ≥ threshold) via MinHash-LSH
     candidate generation + exact verification.
-
-    ``persist_staging=False`` skips caching the shingle/band staging
-    tables entirely (and attaches nothing for ``release_staging`` to
-    free) — for callers that cannot release the caches after
-    materializing, trading one recompute of the shingle stage in the
-    verification join for a guaranteed-leak-free plan.
 
     Output: (id_a, id_b, jaccard) with id_a < id_b. Because every
     candidate is exactly verified, precision is 1.0; recall is the
@@ -242,31 +211,29 @@ def minhash_near_dup_pairs(
     anti-join (safety without eagerness) — e.g. when composing plans
     you may not execute.
     """
+    from pipelines_spark.plans.staging import stage
+
     # The shingle sets feed three consumers (signatures + both sides
-    # of the verification join); cache them once. At cluster scale
-    # this is the classic LSH staging table — swap persist() for a
-    # checkpoint/temp table when the corpus exceeds cluster memory.
-    shingled = _shingled(df, id_col, text_col, shingle_words)
-    if persist_staging:
-        shingled = shingled.persist()
+    # of the verification join); stage them once. At cluster scale
+    # this is the classic LSH staging table — stage with
+    # staging="checkpoint" when the corpus exceeds cluster memory.
+    shingled = stage(_shingled(df, id_col, text_col, shingle_words), eager=False)
     sigs = _minhash_signatures(shingled, id_col, F.col("_shingles"), num_hashes)
 
-    # Band keys (shared helper). Persisted — the band table feeds both
-    # sides of the candidate self-join, and without caching each side
+    # Band keys (shared helper). Staged — the band table feeds both
+    # sides of the candidate self-join, and without staging each side
     # would recompute the full signature stage.
     band_cols = band_key_cols(num_hashes, bands)
-    banded_cached = sigs.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("_band")
+    banded = stage(
+        sigs.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("_band")),
+        eager=False,
     )
-    if persist_staging:
-        banded_cached = banded_cached.persist()
-    banded = banded_cached
 
     if max_bucket_size is not None:
         # hot-bucket guard: at most n_docs·bands/max_bucket_size
         # buckets can exceed the cap, so `hot` is tiny and broadcasts.
-        # Not persisted: it derives from the persisted `banded`, so a
-        # recompute is one small agg over cached data.
+        # Not staged: it derives from the staged `banded`, so a
+        # recompute is one small agg over staged data.
         hot = (
             banded.groupBy("_band")
             .agg(F.count(F.lit(1)).alias("_bn"))
@@ -274,7 +241,7 @@ def minhash_near_dup_pairs(
         )
         apply_filter = True
         if log_hot_buckets:
-            # bounded 1-row action over the cached band table — both
+            # bounded 1-row action over the staged band table — both
             # the logging contract and a planner probe
             stats = hot.agg(
                 F.count(F.lit(1)).alias("n_buckets"), F.sum("_bn").alias("n_members")
@@ -327,9 +294,7 @@ def minhash_near_dup_pairs(
             ).alias("jaccard"),
         )
     )
-    if not persist_staging:
-        return verified
-    return _attach_staging(verified, (shingled, banded_cached))
+    return verified
 
 
 def _prefix_candidate_pairs(
@@ -426,18 +391,20 @@ def prefix_filter_jaccard_pairs(
     """
     from pyspark.sql import Window
 
-    # persisted: the shingle table feeds the inverted index AND both
+    from pipelines_spark.plans.staging import stage
+
+    # staged: the shingle table feeds the inverted index AND both
     # sides of the verification join; the prefix index feeds both
     # sides of the candidate self-join — same staging discipline as
     # minhash_near_dup_pairs (without it the shingle/df stages
     # recompute per consumer; measured 18.9 s → 6.2 s warm at sf0.1)
-    shingled = _shingled(df, id_col, text_col, shingle_words).persist()
+    shingled = stage(_shingled(df, id_col, text_col, shingle_words), eager=False)
     sets = shingled.select(F.col(id_col), "_shingles", F.size("_shingles").alias("_n"))
     inv = shingled.select(F.col(id_col), F.explode("_shingles").alias("_sh"))
     freq = inv.groupBy("_sh").agg(F.count(F.lit(1)).alias("_df"))
 
     w = Window.partitionBy(id_col).orderBy(F.col("_df").asc(), F.col("_sh").asc())
-    prefix = (
+    prefix = stage(
         inv.join(freq, "_sh")
         .withColumn("_rk", F.row_number().over(w))
         .join(sets.select(id_col, "_n"), id_col)
@@ -445,8 +412,9 @@ def prefix_filter_jaccard_pairs(
             F.col("_rk")
             <= F.floor((1.0 - threshold) * F.col("_n")).cast("int") + 1
         )
-        .select(id_col, "_sh", "_n", "_rk")
-    ).persist()
+        .select(id_col, "_sh", "_n", "_rk"),
+        eager=False,
+    )
 
     cands = _prefix_candidate_pairs(prefix, id_col, threshold)
 
@@ -474,7 +442,7 @@ def prefix_filter_jaccard_pairs(
             ).alias("jaccard"),
         )
     )
-    return _attach_staging(out, (shingled, prefix))
+    return out
 
 
 def minhash_fingerprints(
@@ -542,7 +510,6 @@ def incremental_dedup_batch(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    persist_staging: bool = True,
     staging: str = "local",
 ) -> DataFrame:
     """Near-dup decisions for ONE new ingestion batch against an
@@ -582,24 +549,19 @@ def incremental_dedup_batch(
     the same seen-before discipline to files; here it is applied to
     near-duplicate content.
     """
-    # persisted: the batch's band table feeds BOTH sides of the
+    # ``staging`` picks the durability mode of every staged frame
+    # below (plans/staging.py): "local" (localCheckpoint — fastest,
+    # but a lost executor loses the blocks unrecoverably) or
+    # "checkpoint" (reliable checkpoint dir — the posture for
+    # long-lived ingestion loops on preemption-prone clusters, where
+    # out._batch_fps outlives this call).
+    from pipelines_spark.plans.staging import stage
+
+    # staged: the batch's band table feeds BOTH sides of the
     # within-batch self-join AND the store probe — without staging the
     # 32-hash signature pipeline recomputes three times (measured 31.7 s
     # → 3.3 s warm at sf0.1 on the registered query)
-    from pipelines_spark.plans.staging import stage as _stage
-
-    def _maybe_stage(df: DataFrame) -> DataFrame:
-        # persist_staging=False exposes the full lineage for plan
-        # pins (tests) at the cost of recomputation — production
-        # callers keep the default. ``staging`` picks the durability
-        # mode (plans/staging.py): "local" (localCheckpoint — fastest,
-        # but a lost executor loses the blocks unrecoverably) or
-        # "checkpoint" (reliable checkpoint dir — the posture for
-        # long-lived ingestion loops on preemption-prone clusters,
-        # where out._batch_fps outlives this call).
-        return _stage(df, eager=False, staging=staging) if persist_staging else df
-
-    batch_fps = _maybe_stage(
+    batch_fps = stage(
         minhash_fingerprints(
             batch,
             id_col=id_col,
@@ -607,7 +569,9 @@ def incremental_dedup_batch(
             shingle_words=shingle_words,
             num_hashes=num_hashes,
             bands=bands,
-        )
+        ),
+        eager=False,
+        staging=staging,
     )
     # candidate pairs: batch → store (equi-join on the band key) ∪
     # batch → smaller-id batch doc (within-batch self-join)
@@ -624,14 +588,12 @@ def incremental_dedup_batch(
         batch_fps.withColumnsRenamed({id_col: "_prev_id"}),
         ["band_no", "band_key"],
     ).filter(F.col("_prev_id") < F.col("_new_id"))
-    # staged (lazy localCheckpoint, plans/staging.py): cands feeds
-    # THREE consumers — the two candidate-id semi-joins and the
-    # verification join — and is bounded by candidate volume (small).
-    # A stage boundary (not a bare persist) keeps the downstream plan
-    # linear: the three consumers see one RDD scan, not three inlined
-    # copies of the band-probe subtree. GC-freed, nothing to release.
-    from pipelines_spark.plans.staging import stage
-
+    # staged: cands feeds THREE consumers — the two candidate-id
+    # semi-joins and the verification join — and is bounded by
+    # candidate volume (small). A stage boundary keeps the downstream
+    # plan linear: the three consumers see one RDD scan, not three
+    # inlined copies of the band-probe subtree.
+    #
     # Replay guard, part 2 (r12): after a crash between the store
     # write and the decision commit, the replayed batch's OWN
     # fingerprints are in the store — so the store probe can emit
@@ -676,11 +638,8 @@ def incremental_dedup_batch(
             batch.select(id_col, text_col).join(cand_ids, id_col, "left_semi")
         )
     )
-    # staged (lazy localCheckpoint): the shingle sets feed both sides
-    # of the verification join; unlike persist(), the blocks free with
-    # the frame — a long-lived ingestion loop calling this per batch
-    # must not accrete CacheManager entries (release_staging stays a
-    # harmless no-op on it)
+    # staged: the shingle sets feed both sides of the verification
+    # join.
     # NOT widened (widen_scan): all_docs is already candidate-pruned
     # by the semi-joins above, and the structural pin
     # (test_bucketing.py: shingle Project DIRECTLY above LeftSemi)
@@ -688,10 +647,12 @@ def incremental_dedup_batch(
     # repartition between them would break the pin for no measured
     # gain (6.34 s → 6.63 s when tried; the operator's heavy side is
     # the fingerprint pipeline, which minhash_fingerprints widens).
-    sets = _maybe_stage(
+    sets = stage(
         all_docs.select(
             F.col(id_col), word_shingles(text_col, shingle_words).alias("_sh")
-        )
+        ),
+        eager=False,
+        staging=staging,
     )
     verified = (
         cands.join(
@@ -725,13 +686,6 @@ def incremental_dedup_batch(
     # batch_fps is exposed so the ingestion loop can advance the store
     # without recomputing the 32-hash signature pipeline
     # (streaming/dedup_stream.py reads it back via this attribute).
-    # NOTHING is attached for release_staging: the staged frames are
-    # lazy localCheckpoints whose blocks free with the frame (GC +
-    # ContextCleaner); unpersisting a checkpointed frame would
-    # truncate it unrecoverably for any later action, which is a
-    # strictly worse contract than the persist-era "recompute after
-    # release". Callers' release_staging(out) is a harmless no-op.
-    out = _attach_staging(out, ())
     out._batch_fps = batch_fps
     return out
 
@@ -765,15 +719,16 @@ def ngram_jaccard_pairs(
     ``None`` (default, the oracle-parity configuration) keeps the
     fully exact behavior.
     """
-    # persisted: the shingle table feeds every downstream consumer —
+    from pipelines_spark.plans.staging import stage
+
+    # staged: the shingle table feeds every downstream consumer —
     # the per-doc sizes (both join legs) and both sides of the
     # inverted-index self-join. Without staging each consumer re-scans
     # the corpus and re-runs the shingle transform (the r12 before-plan
     # showed 4 scans and ~8 evaluations of the split/transform
     # expression); one staging table is the same LSH discipline
     # minhash_near_dup_pairs applies.
-    shingled = _shingled(df, id_col, text_col, shingle_words).persist()
-    staged: list[DataFrame] = [shingled]
+    shingled = stage(_shingled(df, id_col, text_col, shingle_words), eager=False)
     if max_shingle_freq is not None:
         inv = shingled.select(F.col(id_col), F.explode("_shingles").alias("_sh"))
         hot = (
@@ -826,7 +781,7 @@ def ngram_jaccard_pairs(
                     ).alias("jaccard"),
                 )
             )
-            return _attach_staging(scored, staged)
+            return scored
         # no hot shingles: fall through to the exact plan below
 
     # exact path: carry each document's set size THROUGH the exploded
@@ -868,7 +823,7 @@ def ngram_jaccard_pairs(
             ).alias("jaccard"),
         )
     )
-    return _attach_staging(scored, staged)
+    return scored
 
 
 def minhash_band_audit(
@@ -916,14 +871,15 @@ def minhash_band_audit(
     from fractions import Fraction
 
     from pipelines_spark.functions.exact import exact_div_round
+    from pipelines_spark.plans.staging import stage
 
     frac = Fraction(threshold).limit_denominator(10_000)
     rows_per_band = num_hashes // bands
-    # persisted: the shingle table feeds the truth leg (both self-join
+    # staged: the shingle table feeds the truth leg (both self-join
     # sides, sizes carried through the index) AND the signature leg —
     # without staging each consumer re-scans the corpus and re-runs the
     # shingle transform (same discipline as ngram_jaccard_pairs).
-    shingled = _shingled(df, id_col, text_col, shingle_words).persist()
+    shingled = stage(_shingled(df, id_col, text_col, shingle_words), eager=False)
     inv = shingled.select(F.col(id_col), F.explode("_shingles").alias("_sh"))
     inv_n = shingled.select(
         F.col(id_col),
@@ -1016,7 +972,7 @@ def minhash_band_audit(
         )
         .orderBy("id_a", "id_b")
     )
-    return _attach_staging(out, (shingled,))
+    return out
 
 
 def containment_pairs(
@@ -1045,10 +1001,11 @@ def containment_pairs(
     shingle universe — numerator and denominators alike). Returns
     (contained_id, container_id, containment) with the smaller set
     (ties: smaller id) as contained."""
-    # persisted: one staging table for every consumer (sizes legs +
+    from pipelines_spark.plans.staging import stage
+
+    # staged: one staging table for every consumer (sizes legs +
     # both self-join sides) — same rationale as ngram_jaccard_pairs.
-    shingled = _shingled(df, id_col, text_col, shingle_words).persist()
-    staged: list[DataFrame] = [shingled]
+    shingled = stage(_shingled(df, id_col, text_col, shingle_words), eager=False)
     capped = False
     if max_shingle_freq is not None:
         inv = shingled.select(F.col(id_col), F.explode("_shingles").alias("_sh"))
@@ -1123,7 +1080,7 @@ def containment_pairs(
             F.col("_inter"), F.least("_na", "_nb")
         ).alias("containment"),
     )
-    return _attach_staging(out, staged)
+    return out
 
 
 def _md5_hash32(col: Column) -> Column:
@@ -1182,11 +1139,13 @@ def simhash_pairs(
     is known degenerate-free).
 
     Same contract as minhash's cap: with ``log_hot_groups`` the
-    bounded probe action runs at build time over the cached block
+    bounded probe action runs at build time over the staged block
     table and — finding nothing hot, the overwhelmingly common case —
     leaves the plan identical to the exact one. ``False`` gives a
     fully lazy plan with the cap applied unconditionally.
     """
+    from pipelines_spark.plans.staging import stage
+
     nblocks = max_hamming + 1
     width = 32 // nblocks
     sh = df.select(F.col(id_col), simhash32(text_col).alias("simhash"))
@@ -1207,11 +1166,10 @@ def simhash_pairs(
             )
         ).alias("_b"),
     ).select(id_col, "simhash", "_b.block_no", "_b.block_val")
-    # persisted: the block table feeds both sides of the candidate
-    # self-join (and the hot-group probe) — without caching each
+    # staged: the block table feeds both sides of the candidate
+    # self-join (and the hot-group probe) — without staging each
     # consumer would recompute the 32-aggregate simhash stage
-    blocks_cached = blocks.persist()
-    blocks = blocks_cached
+    blocks = stage(blocks, eager=False)
 
     if max_block_group is not None:
         hot = (
@@ -1221,7 +1179,7 @@ def simhash_pairs(
         )
         apply_filter = True
         if log_hot_groups:
-            n_hot = hot.count()  # bounded probe over the cached blocks
+            n_hot = hot.count()  # bounded probe over the staged blocks
             if n_hot:
                 _LOG.warning(
                     "simhash: dropping %d hot block groups (> %d members) "
@@ -1257,7 +1215,7 @@ def simhash_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-    return _attach_staging(pairs, (blocks_cached,))
+    return pairs
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -1410,7 +1368,8 @@ def semantic_dedup(
     # eager lineage cut: `assigned` feeds BOTH sides of the pair join,
     # and without it each side re-runs the corpus scan + assignment
     # (the same multiply-referenced-staging pattern as
-    # triangle_count's `oriented`); the checkpointed blocks free on GC
+    # triangle_count's `oriented`); the caller's staging scope owns
+    # the blocks
     from pipelines_spark.plans.staging import stage
 
     from pipelines_spark.llm.similarity import (

@@ -2207,8 +2207,7 @@ def margin_bitext_topk(
     decimal sum / k — partition order cannot flip the final margin
     rounding (the Heaps-law lesson). The scored pair table feeds
     THREE consumers (both degree legs + the final margin join), so it
-    is persisted and attached for release_staging — the
-    multi-consumer staging discipline.
+    is staged — the multi-consumer staging discipline.
 
     Scale shape: ``ann_planes=None`` is the exact (brute-force)
     formulation — the query side broadcasts, the corpus side streams,
@@ -2220,7 +2219,7 @@ def margin_bitext_topk(
     deterministic. Queries whose bucket holds no targets are absent
     from the output, same as any bucketed ANN in this module.
     """
-    from pipelines_spark.llm.dedup import _attach_staging
+    from pipelines_spark.plans.staging import stage
 
     bucket = (
         (lambda v: srp_bucket_key(v, dim, ann_planes))
@@ -2242,7 +2241,7 @@ def margin_bitext_topk(
     cand = (
         b.join(F.broadcast(a), "_bucket") if bucket else b.crossJoin(F.broadcast(a))
     )
-    pairs = (
+    pairs = stage(
         cand.select(
             "query_id",
             "target_id",
@@ -2252,8 +2251,8 @@ def margin_bitext_topk(
             )
             .cast("decimal(10,4)")
             .alias("cos"),
-        )
-        .persist()
+        ),
+        eager=False,
     )
     wq = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("target_id"))
     wt = Window.partitionBy("target_id").orderBy(F.desc("cos"), F.asc("query_id"))
@@ -2293,4 +2292,4 @@ def margin_bitext_topk(
             "margin",
         )
     )
-    return _attach_staging(best, (pairs,))
+    return best

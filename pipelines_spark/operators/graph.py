@@ -63,9 +63,9 @@ def pagerank(
     # reads the stored partitions instead of re-running the edge-dedup
     # shuffle, (b) the static plan references one materialized scan per
     # alias rather than re-expanding the lineage, and (c) the backing
-    # blocks are freed by the ContextCleaner as soon as the caller
-    # drops the result frame — no CacheManager entry to leak until
-    # session end (the round-4 staging-leak pattern). At 100 TB pass
+    # blocks are released when the caller's staging scope exits — no
+    # CacheManager entry to leak until session end (the round-4
+    # staging-leak pattern). At 100 TB pass
     # staging="checkpoint" for a reliable checkpoint that survives
     # executor loss (plans/staging.py documents the trade).
     # r13 (guide §2.4): ``assume_distinct`` skips the edge-dedup

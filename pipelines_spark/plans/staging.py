@@ -1,17 +1,32 @@
-"""Staging policy for iterative operators.
+"""Staging: the one way engine code materializes an intermediate.
 
-Iterative operators (pagerank, connected_components, semantic_dedup,
-…) must materialize loop invariants and cut per-iteration lineage, or
-the logical plan grows with the iteration count and multiply-
-referenced stages recompute. HOW they materialize is a durability /
-speed trade the caller should own:
+Iterative and multi-consumer operators (pagerank,
+connected_components, the dedup family, curation, …) must materialize
+shared intermediates and cut their lineage, or the logical plan grows
+with the iteration count and every consumer recomputes its upstream.
+:func:`stage` is the only way engine code does that.
+
+Release is scoped. The caller that owns the action (a bench loop, a
+script, a streaming micro-batch body, a test) opens
+:func:`staging_scope` around building and running the plan. Every
+frame ``stage`` produces inside it registers with the innermost open
+scope, and the scope unpersists their blocks on exit —
+deterministically, not whenever the JVM happens to GC. An action on a
+staged frame after its scope has closed fails on the missing
+checkpoint block; it never silently recomputes. Operators never open
+a scope around a frame they return. Outside any scope the blocks are
+freed by the ContextCleaner once the frame is garbage-collected. The
+open scope is held in a ``ContextVar``, so each thread (e.g. each
+foreachBatch callback) sees only its own.
+
+Durability is a speed trade the caller owns:
 
 - ``"local"`` (default): ``DataFrame.localCheckpoint`` — blocks live
   in executor storage (memory, spilling to local disk). Fastest, no
-  configuration, and the blocks are freed by the ContextCleaner when
-  the frame is GC'd. BUT lineage is discarded, so losing an executor
-  loses the blocks unrecoverably and fails the job. Right for
-  single-node runs, short jobs, and anything cheap to rerun.
+  configuration, released by the scope as above. BUT lineage is
+  discarded, so losing an executor loses the blocks unrecoverably and
+  fails the job. Right for single-node runs, short jobs, and anything
+  cheap to rerun.
 
 - ``"checkpoint"``: ``DataFrame.checkpoint`` — blocks are written to
   the reliable checkpoint directory (HDFS / object store on a
@@ -20,7 +35,8 @@ speed trade the caller should own:
   lost executor re-reads instead of failing — the right posture for
   100 TB multi-hour jobs where preemption is routine and restarting
   a 20-round components loop costs more than the checkpoint writes.
-  Checkpoint files persist until the checkpoint dir is cleaned
+  Scopes do not own these: checkpoint files persist until the
+  checkpoint dir is cleaned
   (``spark.cleaner.referenceTracking.cleanCheckpoints=true`` opts
   into GC-driven cleanup).
 
@@ -30,9 +46,17 @@ the measured trade.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import Iterator
+
 from pyspark.sql import DataFrame
 
 STAGING_MODES = ("local", "checkpoint")
+
+#: frames staged under the innermost open :func:`staging_scope` of the
+#: current thread/context; ``None`` outside any scope
+_SCOPE: ContextVar[list[DataFrame] | None] = ContextVar("staging_scope", default=None)
 
 
 def widen_scan(df: DataFrame, target: int | None = None) -> DataFrame:
@@ -50,7 +74,7 @@ def widen_scan(df: DataFrame, target: int | None = None) -> DataFrame:
     single-row-group parquet files, so every scan is ONE task and all
     map-side work riding it — shingling, text gates, hash projections
     — ran 1/32-parallel. The repartition moves a few hundred KB once
-    and parallelizes everything downstream of it (including persisted
+    and parallelizes everything downstream of it (including
     staging tables, whose block count it sets). Rows only ever carry
     (id, payload) through a round-robin exchange — no keyed semantics
     — and every consumer in this repo is partitioning-order-exact by
@@ -70,9 +94,29 @@ def widen_scan(df: DataFrame, target: int | None = None) -> DataFrame:
 def stage(df: DataFrame, *, eager: bool = True, staging: str = "local") -> DataFrame:
     """Materialize ``df`` (or lazily mark it for materialization at
     its first action when ``eager=False``) and cut its lineage, under
-    the chosen durability mode."""
-    if staging == "local":
-        return df.localCheckpoint(eager=eager)
+    the chosen durability mode. A ``"local"`` frame belongs to the
+    innermost open :func:`staging_scope`."""
     if staging == "checkpoint":
         return df.checkpoint(eager=eager)
-    raise ValueError(f"staging must be one of {STAGING_MODES}, got {staging!r}")
+    if staging != "local":
+        raise ValueError(f"staging must be one of {STAGING_MODES}, got {staging!r}")
+    out = df.localCheckpoint(eager=eager)
+    frames = _SCOPE.get()
+    if frames is not None:
+        frames.append(out)
+    return out
+
+
+@contextmanager
+def staging_scope() -> Iterator[list[DataFrame]]:
+    """Own every frame :func:`stage` produces until exit, then
+    unpersist their checkpoint blocks. Yields the list of frames
+    staged so far (for inspection; do not mutate)."""
+    frames: list[DataFrame] = []
+    token = _SCOPE.set(frames)
+    try:
+        yield frames
+    finally:
+        _SCOPE.reset(token)
+        for f in frames:
+            f._jdf.logicalPlan().rdd().unpersist(False)

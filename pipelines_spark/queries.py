@@ -1749,9 +1749,9 @@ def text_boilerplate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spark.table("documents")
     # tokenize ONCE: the same staged posting table feeds frequency
-    # counting and per-doc scoring (lazy localCheckpoint, not
-    # persist(): blocks free with the frame instead of lingering in
-    # the CacheManager for the session's lifetime)
+    # counting and per-doc scoring (lazy stage, released by the
+    # caller's staging scope instead of lingering in the CacheManager
+    # for the session's lifetime)
     from pipelines_spark.plans.staging import stage as _cut
 
     sh = _cut(doc_shingles(docs), eager=False)
@@ -6223,8 +6223,8 @@ def text_decontamination_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.table("documents")
     from pipelines_spark.plans.staging import stage as _cut_fz
 
-    # staged (lazy localCheckpoint), not persist(): blocks free with
-    # the frame instead of lingering in the CacheManager
+    # staged (lazy), not persist(): released by the caller's staging
+    # scope instead of lingering in the CacheManager
     corpus_sh = _cut_fz(
         docs.filter(F.col("doc_id") >= 10)
         .select("doc_id", F.explode(word_shingles("text", 4)).alias("sh")),
@@ -7240,8 +7240,8 @@ def embed_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("rel"), F.asc("vec_id"))
         .limit(20)
     )
-    # both loop invariants staged (lazy localCheckpoint), not
-    # persist(): cached for the k argmax rounds, freed with the frame
+    # both loop invariants staged (lazy), not persist(): kept for the
+    # k argmax rounds, released by the caller's staging scope
     from pipelines_spark.plans.staging import stage as _cut_mmr
 
     cand = _cut_mmr(cand, eager=False)

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pipelines_spark.naming import normalize_columns
+from pipelines_spark.plans.staging import stage
 
 
 def read_parquet_normalized(spark: SparkSession, path: str) -> DataFrame:
@@ -94,9 +95,10 @@ def read_with_quarantine(
     there (parquet) before returning — the dead-letter zone.
 
     Spark refuses to filter on ONLY the internal corrupt column over a
-    lazy scan (it would require re-parsing); the scan is cached for
-    the two filtered branches — call ``.unpersist()`` on either
-    returned frame's source when done, or let LRU handle it.
+    lazy scan (it would require re-parsing); the scan is staged
+    (plans/staging.py) for the two filtered branches, so it parses
+    once. Its blocks belong to the caller's ``staging_scope`` and are
+    released when that scope exits; read both frames inside it.
     """
     opts = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"}
     opts.update(options or {})
@@ -105,9 +107,9 @@ def read_with_quarantine(
     for k, v in opts.items():
         reader = reader.option(k, v)
     scan = reader.csv(path) if file_format == "csv" else reader.json(path)
-    # input_file_name() must bind below the cache: above an
-    # InMemoryRelation it evaluates to ''
-    df = scan.withColumn("_source_file", F.input_file_name()).cache()
+    # input_file_name() must bind below the stage: above the staged
+    # scan it evaluates to ''
+    df = stage(scan.withColumn("_source_file", F.input_file_name()), eager=False)
     good = df.filter(F.col("_corrupt_record").isNull()).drop(
         "_corrupt_record", "_source_file"
     )

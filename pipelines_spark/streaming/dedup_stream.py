@@ -22,11 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from pipelines_spark.llm.dedup import (
-    incremental_dedup_batch,
-    persist_fingerprints,
-    release_staging,
-)
+from pipelines_spark.llm.dedup import incremental_dedup_batch, persist_fingerprints
+from pipelines_spark.plans.staging import stage, staging_scope
 
 
 def run_incremental_dedup_stream(
@@ -72,45 +69,46 @@ def run_incremental_dedup_stream(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch_df = batch_df.persist()
-        store_fps = _read_store(spark, store_path, id_col, str(batch_id))
-        store_docs = _read_corpus(
-            spark, corpus_path, batch_df, id_col, text_col, str(batch_id)
-        )
-        decisions = incremental_dedup_batch(
-            batch_df.select(id_col, text_col),
-            store_fps,
-            store_docs,
-            id_col=id_col,
-            text_col=text_col,
-            threshold=threshold,
-            staging=staging,
-        ).persist()
-        (
-            decisions.withColumn("_batch_id", F.lit(str(batch_id)))
-            .write.mode("overwrite")
-            .partitionBy("_batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(decisions_path)
-        )
-        enriched = batch_df.join(decisions, id_col, "left")
-        (
-            enriched.withColumn("_batch_id", F.lit(str(batch_id)))
-            .write.mode("overwrite")
-            .partitionBy("_batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(corpus_path)
-        )
-        # the batch's fingerprints were already computed (and persisted
-        # in-memory) inside incremental_dedup_batch — reuse them for the
-        # store advance instead of re-running the 32-hash pipeline
-        persist_fingerprints(decisions._batch_fps, store_path, str(batch_id))
-        # release the operator's staging frames (batch_fps, cands,
-        # shingle sets) — a long-running stream must not leak persisted
-        # frames per micro-batch
-        release_staging(decisions)
-        decisions.unpersist()
-        batch_df.unpersist()
+        # the scope owns every frame staged for this micro-batch (the
+        # operator's batch_fps, cands and shingle sets, plus the two
+        # below) and releases them when the body exits — a
+        # long-running stream holds no blocks of finished batches
+        with staging_scope():
+            batch_df = stage(batch_df, eager=False, staging=staging)
+            store_fps = _read_store(spark, store_path, id_col, str(batch_id))
+            store_docs = _read_corpus(
+                spark, corpus_path, batch_df, id_col, text_col, str(batch_id)
+            )
+            out = incremental_dedup_batch(
+                batch_df.select(id_col, text_col),
+                store_fps,
+                store_docs,
+                id_col=id_col,
+                text_col=text_col,
+                threshold=threshold,
+                staging=staging,
+            )
+            decisions = stage(out, eager=False, staging=staging)
+            (
+                decisions.withColumn("_batch_id", F.lit(str(batch_id)))
+                .write.mode("overwrite")
+                .partitionBy("_batch_id")
+                .option("partitionOverwriteMode", "dynamic")
+                .parquet(decisions_path)
+            )
+            enriched = batch_df.join(decisions, id_col, "left")
+            (
+                enriched.withColumn("_batch_id", F.lit(str(batch_id)))
+                .write.mode("overwrite")
+                .partitionBy("_batch_id")
+                .option("partitionOverwriteMode", "dynamic")
+                .parquet(corpus_path)
+            )
+            # the batch's fingerprints were already computed (and
+            # staged) inside incremental_dedup_batch — reuse them for
+            # the store advance instead of re-running the 32-hash
+            # pipeline
+            persist_fingerprints(out._batch_fps, store_path, str(batch_id))
 
     writer = source.writeStream.foreachBatch(apply_batch).option(
         "checkpointLocation", checkpoint_path

@@ -8,7 +8,8 @@ already is. This script produces that artifact:
 
 - base timings at sf0.1 (best-of-2, same discipline as bench.py);
 - a 10x replica built once; each probe query run N times IN-SUITE
-  (same session, GC hygiene between runs — the bench posture);
+  (same session, each run in its own staging scope — the bench
+  posture);
 - an ISOLATED control: a fresh SparkSession per query running ONLY
   that query on the same replica (what the timing looks like without
   any suite pollution).
@@ -22,7 +23,6 @@ Usage: python scripts/probe_spread.py [runs] [tag]
 
 from __future__ import annotations
 
-import gc
 import json
 import sys
 import tempfile
@@ -35,14 +35,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 SF_DIR = "/root/testdata/sf0.1"
 PROBES = ["graph_pagerank", "graph_communities", "graph_triangles", "graph_kcore"]
 N_COPIES = 10
-
-
-def _release(spark) -> None:
-    spark.catalog.clearCache()
-    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        jrdd.unpersist(False)
-    gc.collect()
-    spark.sparkContext._jvm.System.gc()
 
 
 def _materialize(df) -> None:
@@ -62,6 +54,7 @@ def main() -> None:
     runs = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     from scale_probe import domain_strides, replicate
 
+    from pipelines_spark.plans.staging import staging_scope
     from pipelines_spark.queries import QUERIES
     from pipelines_spark.session import get_spark
 
@@ -75,18 +68,18 @@ def main() -> None:
 
     result: dict[str, dict] = {}
 
-    # base + in-suite probe runs: one session, GC hygiene between runs
+    # base + in-suite probe runs: one session, one staging scope per run
     spark = get_spark("probe_spread_suite")
     QUERIES["a6_distinct_segments"](spark, SF_DIR).count()  # warm
     for name in PROBES:
-        base = _time_best2(QUERIES, name, spark, SF_DIR)
-        _release(spark)
+        with staging_scope():
+            base = _time_best2(QUERIES, name, spark, SF_DIR)
         suite = []
         for _ in range(runs):
-            t0 = time.perf_counter()
-            _materialize(QUERIES[name](spark, str(out_dir)))
-            suite.append(round(time.perf_counter() - t0, 3))
-            _release(spark)
+            with staging_scope():
+                t0 = time.perf_counter()
+                _materialize(QUERIES[name](spark, str(out_dir)))
+                suite.append(round(time.perf_counter() - t0, 3))
         result[name] = {
             "base": base,
             "suite_runs": suite,

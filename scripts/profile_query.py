@@ -24,6 +24,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pipelines_spark.plans.staging import staging_scope  # noqa: E402
 from pipelines_spark.queries import QUERIES  # noqa: E402
 from pipelines_spark.session import get_spark  # noqa: E402
 
@@ -39,10 +40,11 @@ def profile(names, tag="before", runs=2, plans_only=False, sf_dir=None, round_di
     QUERIES["a6_distinct_segments"](spark, sf_dir).count()  # JVM warm-up
     out = {}
     for name in names:
-        df = QUERIES[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        with staging_scope():  # owns the blocks the build stages eagerly
+            df = QUERIES[name](spark, sf_dir)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
         with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as fh:
             fh.write(plan)
         n_exchanges = plan.count("Exchange") - plan.count("BroadcastExchange")
@@ -52,36 +54,31 @@ def profile(names, tag="before", runs=2, plans_only=False, sf_dir=None, round_di
             continue
         times = []
         jobs = stages = tasks = 0
-        for r in range(runs):
-            group = f"{name}-run{r}"
-            sc.setJobGroup(group, name)
-            t0 = time.perf_counter()
-            # rebuild the frame per run: eager staging inside the query
-            # function is part of its real cost (bench.py does the same)
-            q = QUERIES[name](spark, sf_dir)
-            q.write.format("noop").mode("overwrite").save()
-            times.append(round(time.perf_counter() - t0, 3))
-            tracker = sc.statusTracker()
-            job_ids = tracker.getJobIdsForGroup(group)
-            if r == runs - 1:
-                jobs = len(job_ids)
-                for jid in job_ids:
-                    ji = tracker.getJobInfo(jid)
-                    if ji:
-                        stages += len(ji.stageIds)
-                        for sid in ji.stageIds:
-                            si = tracker.getStageInfo(sid)
-                            if si:
-                                tasks += si.numTasks
-            sc.setJobGroup(f"cleanup-{name}", "cleanup")
-        # release leftover staged blocks between queries (bench hygiene)
-        spark.catalog.clearCache()
-        for jrdd in sc._jsc.getPersistentRDDs().values():
-            jrdd.unpersist(False)
-        import gc
-
-        gc.collect()
-        sc._jvm.System.gc()
+        # the scope releases the query's staged blocks after its runs
+        with staging_scope():
+            for r in range(runs):
+                group = f"{name}-run{r}"
+                sc.setJobGroup(group, name)
+                t0 = time.perf_counter()
+                # rebuild the frame per run: eager staging inside the
+                # query function is part of its real cost (bench.py
+                # does the same)
+                q = QUERIES[name](spark, sf_dir)
+                q.write.format("noop").mode("overwrite").save()
+                times.append(round(time.perf_counter() - t0, 3))
+                tracker = sc.statusTracker()
+                job_ids = tracker.getJobIdsForGroup(group)
+                if r == runs - 1:
+                    jobs = len(job_ids)
+                    for jid in job_ids:
+                        ji = tracker.getJobInfo(jid)
+                        if ji:
+                            stages += len(ji.stageIds)
+                            for sid in ji.stageIds:
+                                si = tracker.getStageInfo(sid)
+                                if si:
+                                    tasks += si.numTasks
+                sc.setJobGroup(f"cleanup-{name}", "cleanup")
         out[name] = {
             "times": times,
             "best": min(times),

@@ -15,6 +15,9 @@ from pipelines_spark.sinks.partitioned import write_bucketed_table
 def bucketed(spark, sf_small):
     orders = spark.read.parquet(f"{sf_small}/orders.parquet")
     lineitem = spark.read.parquet(f"{sf_small}/lineitem.parquet")
+    # a table left over by an interrupted run must not fail the write
+    spark.sql("DROP TABLE IF EXISTS orders_b")
+    spark.sql("DROP TABLE IF EXISTS lineitem_b")
     write_bucketed_table(orders, "orders_b", ["o_orderkey"], num_buckets=8)
     write_bucketed_table(
         lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
@@ -121,7 +124,9 @@ def test_fingerprint_store_bucketed_probe_skips_store_shuffle(spark, sf_small):
         spark.sql("DROP TABLE IF EXISTS fps_store_b")
 
 
-def test_incremental_dedup_verification_is_candidate_bounded(spark, sf_small):
+def test_incremental_dedup_verification_is_candidate_bounded(
+    spark, sf_small, monkeypatch
+):
     """The 100 TB-shape pin for exact verification: the shingle
     projection (the `_sh` word-shingles Project) must sit DIRECTLY
     above a LeftSemi join on the candidate-id set, for BOTH corpus
@@ -132,7 +137,6 @@ def test_incremental_dedup_verification_is_candidate_bounded(spark, sf_small):
     from pipelines_spark.llm.dedup import (
         incremental_dedup_batch,
         minhash_fingerprints,
-        release_staging,
     )
 
     docs = spark.read.parquet(f"{sf_small}/documents.parquet").select(
@@ -141,14 +145,16 @@ def test_incremental_dedup_verification_is_candidate_bounded(spark, sf_small):
     store_docs = docs.filter(F.col("doc_id") < 250)
     batch = docs.filter(F.col("doc_id") >= 250)
     fps = minhash_fingerprints(store_docs, id_col="doc_id", text_col="text")
-    # persist_staging=False: the default path stages batch_fps/sets
-    # via lazy localCheckpoint (r10 persist-hygiene), which compiles
-    # the structure under pin into an opaque LogicalRDD — the unstaged
-    # variant builds the IDENTICAL plan tree minus the stage wrappers,
-    # so the pin inspects the real structure (correctness of the
-    # staged default is covered by the parity tests + the
-    # CacheManager-hygiene sweep in test_lifecycle.py)
-    out = incremental_dedup_batch(batch, fps, store_docs, persist_staging=False)
+    # stage() as identity: the default path stages batch_fps/cands/sets
+    # via lazy localCheckpoint, which compiles the structure under pin
+    # into an opaque LogicalRDD — without the stage wrappers the
+    # operator builds the IDENTICAL plan tree, so the pin inspects the
+    # real structure (correctness of the staged default is covered by
+    # the parity tests + the staging-scope pins in test_plans.py)
+    monkeypatch.setattr(
+        "pipelines_spark.plans.staging.stage", lambda df, **_: df
+    )
+    out = incremental_dedup_batch(batch, fps, store_docs)
     opt = out._jdf.queryExecution().optimizedPlan().toString()
     lines = [ln for ln in opt.splitlines() if ln.strip()]
     # the verification shingle-set projection aliases the CASE-WHEN
@@ -167,4 +173,3 @@ def test_incremental_dedup_verification_is_candidate_bounded(spark, sf_small):
     assert len(shingle_projs) >= 2, opt  # one per union leg, at least
     for i in shingle_projs:
         assert "LeftSemi" in lines[i + 1], "\n".join(lines[i : i + 2])
-    release_staging(out)

@@ -401,23 +401,23 @@ def test_run_maintenance_vacuum_then_compact_idempotent(spark, tmp_path):
     assert stats2 == {"partitions_removed": 0, "partitions_compacted": 0}
 
 
-def test_dedup_operators_release_staging_caches(spark, sf_medium):
-    """The standalone dedup operators persist staging frames; after
-    materializing the output and calling release_staging, no extra
+def test_dedup_operators_staging_scope_releases_caches(spark, sf_medium):
+    """The standalone dedup operators stage frames; once the staging
+    scope around building and materializing the output exits, no extra
     persisted RDDs remain (explicit cache lifecycle, not LRU/teardown)."""
     from pipelines_spark.llm.dedup import (
         minhash_near_dup_pairs,
         ngram_jaccard_pairs,
-        release_staging,
         simhash_pairs,
     )
+    from pipelines_spark.plans.staging import staging_scope
 
     docs = spark.read.parquet(f"{sf_medium}/documents.parquet").limit(300)
 
-    def n_persisted():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
-    base = n_persisted()
+    base = persisted()
     ops = [
         lambda: minhash_near_dup_pairs(docs, id_col="doc_id", text_col="text"),
         lambda: ngram_jaccard_pairs(
@@ -426,13 +426,12 @@ def test_dedup_operators_release_staging_caches(spark, sf_medium):
         lambda: simhash_pairs(docs, id_col="doc_id", text_col="text"),
     ]
     for build in ops:
-        out = build()
-        out.count()  # materialize while staging is cached
-        assert n_persisted() > base
-        released = release_staging(out)
-        assert released >= 1
-        assert n_persisted() == base
-        assert release_staging(out) == 0  # idempotent
+        with staging_scope() as staged:
+            out = build()
+            out.count()  # materialize while staging is held
+            assert persisted() - base
+        assert len(staged) >= 1
+        assert not persisted() - base
 
 
 def test_query_local_staging_leaves_no_cachemanager_entries(spark):
@@ -440,15 +439,13 @@ def test_query_local_staging_leaves_no_cachemanager_entries(spark):
     five formerly-persist() frames (boilerplate shingles, PCA
     covariance, fuzzy-decontamination corpus shingles, both MMR loop
     invariants) and incremental dedup's batch_fps/sets now stage via
-    lazy localCheckpoint — blocks free with the frame via the
-    ContextCleaner instead of accreting CacheManager entries for the
-    session's lifetime. A reintroduced bare ``.persist()`` in any of
-    these queries fails here: the SQL CacheManager must be exactly as
-    empty after the action as before it.
-
-    (Operators that persist THROUGH ``_attach_staging`` keep the
-    explicit ``release_staging`` lifecycle — that's a caller-owned
-    cache, not a leak, and out of scope here.)
+    lazy localCheckpoint — blocks are released by the caller's staging
+    scope (or the ContextCleaner outside one) instead of accreting
+    CacheManager entries for the session's lifetime. A reintroduced
+    bare ``.persist()`` in any of these queries fails here: the SQL
+    CacheManager must be exactly as empty after the action as before
+    it. (tests/test_oracle_parity.py pins the same for every
+    registered query.)
     """
     from pipelines_spark.queries import QUERIES
 

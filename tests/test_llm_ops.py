@@ -1938,6 +1938,7 @@ def test_curate_corpus_optional_stat_gates(spark):
     stages, and no staging frames stay persisted."""
     from pipelines_spark.llm.curation import CurationConfig, curate_corpus
     from pipelines_spark.llm.text import ngram_cross_entropy
+    from pipelines_spark.plans.staging import staging_scope
 
     # entropy scenario: similar sentences w/ unique words per doc (no
     # shared 8-word runs) + one gibberish outlier
@@ -1957,10 +1958,11 @@ def test_curate_corpus_optional_stat_gates(spark):
         min_quality=0.0, min_tokens=1, max_entropy_bits=cut,
         near_dup_threshold=0.95,
     )
-    curated, stats = curate_corpus(docs, cfg)
-    kept = {r["doc_id"] for r in curated.collect()}
-    assert "lm_entropy_gate" in [r["stage"] for r in stats.collect()]
-    assert 100 not in kept and len(kept) == 10
+    with staging_scope() as staged:
+        curated, stats = curate_corpus(docs, cfg)
+        kept = {r["doc_id"] for r in curated.collect()}
+        assert "lm_entropy_gate" in [r["stage"] for r in stats.collect()]
+        assert 100 not in kept and len(kept) == 10
 
     # dup-span scenario: two docs sharing a 20-word run + clean docs
     dup_run = " ".join(f"boiler{i}" for i in range(20))
@@ -1972,19 +1974,19 @@ def test_curate_corpus_optional_stat_gates(spark):
     rows2.append((201, "prefix words here " + dup_run + " and a suffix"))
     docs2 = spark.createDataFrame(rows2, ["doc_id", "text"])
     cfg2 = CurationConfig(min_quality=0.0, min_tokens=1, max_dup_frac=0.6)
-    curated2, stats2 = curate_corpus(docs2, cfg2)
-    kept2 = {r["doc_id"] for r in curated2.collect()}
-    assert "dup_span_gate" in [r["stage"] for r in stats2.collect()]
-    assert 200 not in kept2 and 201 not in kept2
-    assert set(range(5)) <= kept2
-    # cache hygiene: every gate staging frame was explicitly released
-    # (the returned canonical frame itself may stay cached by design,
-    # and connected_components' localCheckpoint blocks free on GC)
-    from pyspark import StorageLevel
-
-    for df_out in (curated, curated2):
-        for frame in getattr(df_out, "_staged_frames", ()):  # none expected
-            assert frame.storageLevel == StorageLevel.NONE
+    with staging_scope() as staged2:
+        curated2, stats2 = curate_corpus(docs2, cfg2)
+        kept2 = {r["doc_id"] for r in curated2.collect()}
+        assert "dup_span_gate" in [r["stage"] for r in stats2.collect()]
+        assert 200 not in kept2 and 201 not in kept2
+        assert set(range(5)) <= kept2
+    # cache hygiene: every frame the pipeline staged (gates, LSH
+    # tables, connected_components' rounds, the canonical frame) was
+    # released when its scope exited
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    assert staged and staged2
+    for frame in staged + staged2:
+        assert frame._jdf.logicalPlan().rdd().id() not in persisted
 
 
 def test_containment_posting_list_cap(spark, caplog):

@@ -18,6 +18,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from pipelines_spark.plans.staging import staging_scope
 
 SF_DIR = os.environ.get("SPARK_GRAFT_PARITY_SF", "/root/testdata/sf0.01")
 TABLES = (
@@ -127,9 +128,20 @@ def _arrow_family(at) -> str:
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_parity(name, spark, duck):
-    sdf = QUERIES[name](spark, SF_DIR)
-    s_cols = list(sdf.columns)
-    s_rows = [tuple(r) for r in sdf.collect()]
+    jsc = spark.sparkContext._jsc
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    before = set(jsc.getPersistentRDDs().keys())
+    with staging_scope():
+        sdf = QUERIES[name](spark, SF_DIR)
+        s_cols = list(sdf.columns)
+        s_schema = sdf.schema
+        s_rows = [tuple(r) for r in sdf.collect()]
+    # the scope released everything the query staged, and the query
+    # left no CacheManager entry behind
+    leaked = set(jsc.getPersistentRDDs().keys()) - before
+    assert not leaked, f"{name}: persisted RDDs outlive the staging scope: {leaked}"
+    assert cache.isEmpty(), f"{name}: left a CacheManager entry behind"
 
     res = duck.execute(ORACLES[name])
     d_cols = [c[0] for c in res.description]
@@ -145,7 +157,7 @@ def test_parity(name, spark, duck):
     # decimal as its own family so un-CAST sums fail here, locally.
     arrow_schema = duck.execute(ORACLES[name]).arrow().schema
     d_fams = {f.name: _arrow_family(f.type) for f in arrow_schema}
-    s_fams = {f.name: _spark_family(f.dataType) for f in sdf.schema.fields}
+    s_fams = {f.name: _spark_family(f.dataType) for f in s_schema.fields}
     fam_diffs = {
         c: (s_fams[c], d_fams[c]) for c in s_fams if s_fams[c] != d_fams[c]
     }

@@ -278,3 +278,119 @@ def test_register_widens_fact_scans(spark, sf_medium, monkeypatch):
         # the cache is keyed by (path, parallelism) only — drop the
         # entries computed under this test's split-size override
         Q._SCAN_WIDTH_CACHE.clear()
+
+
+def _persisted_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _checkpoint_rdd_id(df) -> int:
+    return df._jdf.logicalPlan().rdd().id()
+
+
+def test_staged_frame_is_unreadable_after_its_scope(spark):
+    """Scoped release is real, not advisory: once the scope that
+    staged a frame (lazily or eagerly) has closed, an action on the
+    frame fails on the missing checkpoint block. It must never return
+    rows, e.g. by silently recomputing from lineage."""
+    from pipelines_spark.plans.staging import stage, staging_scope
+
+    for eager in (False, True):
+        with staging_scope():
+            staged = stage(
+                spark.range(200).withColumn("y", F.col("id") * 2), eager=eager
+            )
+            assert staged.count() == 200
+        assert _checkpoint_rdd_id(staged) not in _persisted_ids(spark)
+        with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+            staged.collect()
+
+
+def test_dedup_stream_micro_batches_leave_no_persisted_rdds(spark, tmp_path, sf_small):
+    """A long-running ingestion stream must not accumulate blocks per
+    micro-batch: after three micro-batches of the streaming dedup loop
+    every RDD persisted while they ran is gone — released by each
+    batch body's staging scope, not left to a JVM GC."""
+    import time
+
+    from pipelines_spark.streaming.dedup_stream import run_incremental_dedup_stream
+
+    docs = spark.read.parquet(f"{sf_small}/documents.parquet").select("doc_id", "text")
+    src = str(tmp_path / "src")
+    for lo, hi in ((0, 170), (170, 340), (340, None)):
+        part = docs.filter(F.col("doc_id") >= lo)
+        if hi is not None:
+            part = part.filter(F.col("doc_id") < hi)
+        part.coalesce(1).write.mode("append").parquet(src)
+        time.sleep(1.1)  # distinct mtimes: one file per trigger, in order
+
+    before = _persisted_ids(spark)
+    q = run_incremental_dedup_stream(
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src),
+        corpus_path=str(tmp_path / "corpus"),
+        store_path=str(tmp_path / "store"),
+        decisions_path=str(tmp_path / "decisions"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+        trigger={"availableNow": True},
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    batches = spark.read.parquet(str(tmp_path / "decisions")).select("_batch_id")
+    assert batches.distinct().count() == 3
+    leaked = _persisted_ids(spark) - before
+    assert not leaked, f"micro-batches left persisted RDDs behind: {leaked}"
+
+
+def test_concurrent_staging_scopes_release_only_their_own_frames(spark):
+    """Scopes live in a ContextVar: two threads (e.g. two foreachBatch
+    callbacks) each own exactly the frames they staged, closing one
+    thread's scope leaves the other's frame readable, and a scope open
+    in the parent thread captures neither."""
+    import threading
+
+    from pipelines_spark.plans.staging import stage, staging_scope
+
+    a_staged, b_closed = threading.Event(), threading.Event()
+    seen: dict = {}
+    errors: list = []
+
+    def worker_a():
+        try:
+            with staging_scope() as own:
+                frame = stage(spark.range(10), eager=True)
+                seen["a"] = _checkpoint_rdd_id(frame)
+                a_staged.set()
+                assert b_closed.wait(120)
+                seen["a_alive"] = seen["a"] in _persisted_ids(spark)
+                seen["a_count"] = frame.count()
+                seen["a_own"] = [_checkpoint_rdd_id(f) for f in own]
+        except Exception as e:  # surfaced in the main thread
+            errors.append(e)
+            a_staged.set()
+
+    def worker_b():
+        try:
+            assert a_staged.wait(120)
+            with staging_scope() as own:
+                seen["b"] = _checkpoint_rdd_id(stage(spark.range(20), eager=True))
+                seen["b_own"] = [_checkpoint_rdd_id(f) for f in own]
+            seen["b_released"] = seen["b"] not in _persisted_ids(spark)
+        except Exception as e:
+            errors.append(e)
+        finally:
+            b_closed.set()
+
+    with staging_scope() as parent:
+        threads = [threading.Thread(target=w) for w in (worker_a, worker_b)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(300)
+            assert not t.is_alive()
+    assert not errors, errors
+    assert parent == []
+    assert seen["a_own"] == [seen["a"]] and seen["b_own"] == [seen["b"]]
+    assert seen["b_released"] and seen["a_alive"] and seen["a_count"] == 10
+    assert not {seen["a"], seen["b"]} & _persisted_ids(spark)
